@@ -128,7 +128,7 @@ def run_dedup(
     checkpoint: str = "full",
     iceberg_catalog: str | None = None,
 ) -> DedupResult:
-    """collect_metrics=False skips the per-stage counter jobs (bench mode).
+    """collect_metrics=False skips the metrics table and its drain jobs.
 
     checkpoint="full": every stage lands in parquet (resume skips finished
     stages). checkpoint="min": intermediate edge tables use localCheckpoint
@@ -166,7 +166,8 @@ def _run_dedup_stages(
     iceberg_catalog: str | None,
 ) -> DedupResult:
     io = TableIO(spark, ckpt_root, run_id, iceberg_catalog=iceberg_catalog)
-    sink = MetricsSink(spark, f"{ckpt_root}/{run_id}/_metrics", run_id)
+    sink = (MetricsSink(io, f"{ckpt_root}/{run_id}/_metrics")
+            if collect_metrics else None)
     durable = {"docs", "signatures", "edges", "labels", "clusters", "exact_groups"}
 
     # A small single-file input scans as ONE split, serializing the extraction
@@ -230,10 +231,8 @@ def _run_dedup_stages(
                   file=_sys.stderr, flush=True)
         out = io.read(name)
         if collect_metrics:
-            sink.record_stage(
-                name, out, observed.get(rows_in, -1), t.wall_ms,
-                dropped=int(dropped), rows_out=observed[name],
-            )
+            sink.record_stage(name, observed.get(rows_in, -1), observed[name],
+                              t.wall_ms, int(dropped))
         return out
 
     docs = stage("docs", lambda: extract_docs(pages))

@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import os
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -65,6 +66,20 @@ class TableIO:
             df.writeTo(self._table(stage)).createOrReplace()
         else:
             df.write.mode("overwrite").parquet(self._path(stage))
+
+    def file_row_counts(self, stage: str) -> list[int]:
+        """Rows of each data file the stage's write committed, in write order
+        (``part-NNNNN``), from metadata: parquet footers (no Spark job), or
+        the Iceberg backend's ``files`` table."""
+        if self.iceberg_catalog:
+            files = self.spark.sql(
+                f"SELECT file_path, record_count FROM {self._table(stage)}.files"
+            ).collect()
+            return [r["record_count"] for r in sorted(files)]
+        path = self._path(stage)
+        return [pq.ParquetFile(os.path.join(path, f)).metadata.num_rows
+                for f in sorted(os.listdir(path))
+                if not f.startswith(("_", "."))]
 
     def read(self, stage: str) -> DataFrame:
         if self.iceberg_catalog:

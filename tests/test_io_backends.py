@@ -8,6 +8,8 @@ from __future__ import annotations
 
 from unittest.mock import MagicMock
 
+from pyspark.sql import Row
+
 from replicheck_spark.sources.io import TableIO
 
 
@@ -41,6 +43,21 @@ def test_iceberg_read_uses_read_table():
     io = TableIO(spark, "/ckpt", "run7", iceberg_catalog="ice.db")
     io.read("labels")
     spark.read.table.assert_called_once_with("ice.db.run7_841aaa70_labels")
+
+
+def test_iceberg_file_row_counts_read_files_metadata_table():
+    """Per-file lineage counts come from the table's ``files`` metadata
+    table, ordered by data file path (Iceberg names files by task index)."""
+    spark = _fake_spark()
+    spark.sql.return_value.collect.return_value = [
+        Row(file_path="s3://w/data/00001-1-x.parquet", record_count=7),
+        Row(file_path="s3://w/data/00000-0-x.parquet", record_count=5),
+    ]
+    io = TableIO(spark, "/ckpt", "run7", iceberg_catalog="ice.db")
+    assert io.file_row_counts("edges") == [5, 7]
+    spark.sql.assert_called_once_with(
+        "SELECT file_path, record_count FROM ice.db.run7_841aaa70_edges.files"
+    )
 
 
 def test_iceberg_run_id_sanitized_to_sql_identifier():
@@ -127,3 +144,4 @@ def test_iceberg_backend_end_to_end_when_jar_present(spark, tmp_path):
     # a re-run overwrites idempotently (createOrReplace), never appends
     io.write("stage1", df.filter("doc_id < 3"))
     assert io.read("stage1").count() == 3
+    assert sum(io.file_row_counts("stage1")) == 3  # metrics-sink lineage
