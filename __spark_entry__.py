@@ -574,9 +574,8 @@ def oracle_sql() -> dict[str, str]:
             LIMIT 20
         """,
         # Gopher repetition filters (Rae et al. 2021 A1.1); the Spark side
-        # groups grams by xxhash64 of the token slice instead of the gram
-        # string — counts per distinct gram are identical, so the fractions
-        # match exactly.
+        # counts grams as token tuples instead of gram strings — counts per
+        # distinct gram are identical, so the fractions match exactly.
         "repetition_stats": f"""
             WITH d AS (SELECT doc_id, {_TOKS} AS t FROM documents),
             ex AS (

@@ -50,11 +50,6 @@ def parse_args(argv):
         "dirs under --ckpt (requires the Iceberg runtime jar + catalog conf "
         "at spark-submit time)",
     )
-    p.add_argument(
-        "--shingle-source", choices=["text", "jvm"], default=None,
-        help="signature-stage shingle computation (default: DedupConfig "
-        "default; see config.py shingle_source)",
-    )
     p.add_argument("--seed", type=int, default=42)
     return p.parse_args(argv)
 
@@ -77,15 +72,12 @@ def main(argv=None) -> int:
     from replicheck_spark.plans.pipeline import run_dedup
     from replicheck_spark.session import get_spark
 
-    cfg_kwargs = dict(
+    cfg = DedupConfig(
         min_similarity=args.min_similarity,
         min_size=args.min_size,
         shingle_k=args.shingle_k,
         seed=args.seed,
     )
-    if args.shingle_source is not None:
-        cfg_kwargs["shingle_source"] = args.shingle_source
-    cfg = DedupConfig(**cfg_kwargs)
     spark = get_spark("replicheck_spark_dedup", master=args.master)
 
     # `is not None`: --synth 0 must be rejected as an explicit (empty) synth

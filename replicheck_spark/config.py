@@ -41,14 +41,6 @@ class DedupConfig:
     bucket_cap: int = 512            # max docs per LSH bucket for all-pairs
     salt_buckets: int = 8            # salting factor for the band shuffle
 
-    # signature-stage shingle computation: "text" ships norm_text through
-    # Arrow and hashes shingles in Python (blake2b token hashes + poly
-    # combine); "jvm" computes distinct xxhash64 shingle hashes with JVM
-    # expressions and ships only array<long> — Python does pure-numpy
-    # minhash/simhash/band math. Same downstream semantics either way (all
-    # consumers equality-test the hashes); A/B-benched in BENCH/BASELINE.md.
-    shingle_source: str = "text"
-
     # determinism
     seed: int = 42
 
@@ -70,11 +62,6 @@ class DedupConfig:
             )
         if self.shingle_k < 1:
             raise ValueError(f"shingle_k must be >= 1, got {self.shingle_k}")
-        if self.shingle_source not in ("text", "jvm"):
-            raise ValueError(
-                f"shingle_source must be 'text' or 'jvm', got "
-                f"{self.shingle_source!r}"
-            )
         if self.substr_anchors_expected < 1:
             raise ValueError(
                 "substr_anchors_expected must be >= 1, got "

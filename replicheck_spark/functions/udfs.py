@@ -151,73 +151,6 @@ def make_signature_udf(
     return signature.asNondeterministic()
 
 
-def make_signature_from_hashes_udf(
-    num_perm: int, bands: int, rows: int, seed: int, anchor_q: int = 0
-):
-    """Signature UDF over PRE-HASHED shingles: ``array<long>`` (distinct
-    64-bit shingle hashes, computed JVM-side by
-    ``signatures.shingle_hash_expr``) -> the same signature struct as
-    ``make_signature_udf``.
-
-    The A/B alternative to the text-input UDF: Python receives ints, not
-    kilobyte strings, so the UDF body is pure numpy (minhash/simhash/band
-    math) — no tokenize, no per-token hashing, no string objects. Given the
-    same shingle-hash multiset, the outputs are byte-identical to the text
-    path's downstream math (pytest-gated); the HASH VALUES differ from the
-    text path (xxhash64-of-shingle-string vs splitmix64-of-token-poly), which
-    is invisible to every consumer — shingles/anchors/bands are only ever
-    equality-tested, and Jaccard over distinct hash sets is hash-function-
-    invariant (modulo ~2^-32 collisions).
-    """
-    coeffs = mh.make_coeffs(num_perm, seed)
-
-    @pandas_udf(signature_schema())
-    def signature_from_hashes(shingles: pd.Series) -> pd.DataFrame:
-        lists = [
-            np.asarray(v, dtype=np.int64) if v is not None
-            else np.empty(0, dtype=np.int64)
-            for v in shingles.tolist()
-        ]
-        counts = np.fromiter((len(v) for v in lists), dtype=np.int64,
-                             count=len(lists))
-        sh_off = np.zeros(len(lists) + 1, dtype=np.int64)
-        np.cumsum(counts, out=sh_off[1:])
-        sh64 = (
-            np.concatenate(lists) if lists else np.empty(0, dtype=np.int64)
-        )
-        flat_sh = sh64.view(np.uint64)
-        m = mh.minhash_flat(flat_sh, sh_off, coeffs)
-        s = mh.simhash_flat(flat_sh, sh_off)
-        b = mh.band_hashes(m, bands, rows)
-        b64 = b.astype(np.int64)
-        s64 = s.astype(np.int64)
-        sh32 = flat_sh.astype(np.uint32).view(np.int32)
-        if anchor_q > 0:
-            # signed floored mod == Spark pmod — identical to the text path
-            is_anchor = (sh64 % anchor_q) == 0
-        else:
-            is_anchor = np.zeros(len(sh64), dtype=bool)
-        n = len(lists)
-        return pd.DataFrame(
-            {
-                "shingles": [
-                    sh32[sh_off[i] : sh_off[i + 1]] for i in range(n)
-                ],
-                "anchors": [
-                    sh64[sh_off[i] : sh_off[i + 1]][
-                        is_anchor[sh_off[i] : sh_off[i + 1]]
-                    ]
-                    for i in range(n)
-                ],
-                "simhash": s64.tolist(),
-                "bands": [b64[i] for i in range(n)],
-            }
-        )
-
-    # same projection-collapse guard as make_signature_udf
-    return signature_from_hashes.asNondeterministic()
-
-
 def make_anchor_hash_udf(shingle_k: int, anchor_q: int):
     """Lean signature for stages that only need the 64-bit substring-anchor
     subset (shingle hashes ≡ 0 mod ``anchor_q``) — skips the

@@ -15,10 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from replicheck_spark.config import DedupConfig
-from replicheck_spark.functions.udfs import (
-    make_signature_from_hashes_udf,
-    make_signature_udf,
-)
+from replicheck_spark.functions.udfs import make_signature_udf
 from replicheck_spark.operators.blocks import _gated_hint
 from replicheck_spark.operators.confirm import confirm_pairs
 from replicheck_spark.operators.exact import capped_members_agg
@@ -26,15 +23,7 @@ from replicheck_spark.operators.lsh import candidate_pairs, explode_bands
 
 
 def _sig_col(cfg: DedupConfig, text_col: str = "text"):
-    """The signature struct column for a raw-text documents table, honoring
-    cfg.shingle_source (see DedupConfig / signatures.shingle_hash_expr)."""
-    if cfg.shingle_source == "jvm":
-        from replicheck_spark.operators.signatures import shingle_hash_expr
-
-        u = make_signature_from_hashes_udf(
-            cfg.num_perm, cfg.lsh_bands, cfg.lsh_rows, cfg.seed
-        )
-        return u(shingle_hash_expr(text_col, cfg.shingle_k))
+    """The signature struct column for a raw-text documents table."""
     u = make_signature_udf(
         cfg.shingle_k, cfg.num_perm, cfg.lsh_bands, cfg.lsh_rows, cfg.seed
     )

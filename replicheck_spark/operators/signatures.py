@@ -13,47 +13,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from replicheck_spark.config import DedupConfig
-from replicheck_spark.functions.udfs import (
-    make_signature_from_hashes_udf,
-    make_signature_udf,
-)
-
-
-def shingle_hash_expr(text_col: str, k: int):
-    """DISTINCT 64-bit k-shingle hashes of a (normalized) text column as a
-    pure JVM expression: sequence/slice/concat_ws/xxhash64 inside whole-stage
-    codegen — the same expression family as dedup_ops._shingles_df. Short
-    docs (0 < n < k tokens) hash one shingle over all n tokens; empty text
-    yields an empty array (both matching the Python tokenize semantics).
-
-    This is the 'jvm' shingle source: only 8-byte hashes cross Arrow into
-    the signature UDF, and Python never tokenizes or hashes strings."""
-    toks = F.split(F.col(text_col), " ")
-    sh = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(F.size(toks) - (k - 1), F.lit(1))),
-            lambda i: F.xxhash64(F.concat_ws(" ", F.slice(toks, i, k))),
-        )
-    )
-    return F.when(
-        F.length(F.trim(F.col(text_col))) == 0,
-        F.array().cast("array<long>"),
-    ).otherwise(sh)
+from replicheck_spark.functions.udfs import make_signature_udf
 
 
 def compute_signatures(elig: DataFrame, cfg: DedupConfig) -> DataFrame:
-    if cfg.shingle_source == "jvm":
-        sig_udf = make_signature_from_hashes_udf(
-            cfg.num_perm, cfg.lsh_bands, cfg.lsh_rows, cfg.seed,
-            anchor_q=cfg.anchor_modulus(),
-        )
-        sig_col = sig_udf(shingle_hash_expr("norm_text", cfg.shingle_k))
-    else:
-        sig = make_signature_udf(
-            cfg.shingle_k, cfg.num_perm, cfg.lsh_bands, cfg.lsh_rows,
-            cfg.seed, anchor_q=cfg.anchor_modulus(),
-        )
-        sig_col = sig(F.col("norm_text"))
+    sig = make_signature_udf(
+        cfg.shingle_k, cfg.num_perm, cfg.lsh_bands, cfg.lsh_rows,
+        cfg.seed, anchor_q=cfg.anchor_modulus(),
+    )
+    sig_col = sig(F.col("norm_text"))
     return (
         elig.select(
             "doc_id", "url", "host", "n_tokens", "sha256",

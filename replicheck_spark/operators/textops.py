@@ -14,6 +14,8 @@ top-N large files (LF.py:88-91).
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 from pyspark.sql.pandas.functions import pandas_udf
@@ -251,29 +253,59 @@ def top_tokens(docs: DataFrame, k: int = 20) -> DataFrame:
     )
 
 
-def _repetition_stats_arrow(
-    docs: DataFrame, top2gram_max: float, dup5gram_char_max: float,
-    dup_line_max: float, dup_line_char_max: float, kernel: str = "counter",
+def repetition_stats(
+    docs: DataFrame,
+    top2gram_max: float = 0.20,
+    dup5gram_char_max: float = 0.15,
+    dup_line_max: float = 0.30,
+    dup_line_char_max: float = 0.20,
 ) -> DataFrame:
-    """Arrow-batched per-doc implementation of repetition_stats — see its
-    docstring for the measured reversal rationale. Two kernels, bit-identical
-    values (integer counts; the same IEEE double divisions):
-    ``kernel="counter"`` (default) is the per-doc Python Counter loop —
-    MEASURED WINNER of the round-7 vectorization A/B (1.65s vs 3.0s on
-    10k x 300-token batches; BENCH/BASELINE.md round 7); ``kernel="numpy"``
-    counts grams batch-wide with factorize + bincount (see
-    _np_batch_metrics), kept as the committed loser the parity test pins
-    the winner against. Semantics mirror the expression path
-    token for token: single-space split keeps empty tokens, lines are
-    trimmed of SPACES ONLY (``strip(" ")`` — Python's bare strip would also
-    eat \\r/\\t, diverging from F.trim and the DuckDB oracle), gram char
-    length is the joined-string length (token chars + single separators),
-    and the most-frequent-bigram tie-break is (count, char mass), exactly
-    the lexicographic struct max of the expr/oracle sides."""
-    import pandas as pd
-    from collections import Counter
-    from pyspark.sql import types as T
+    """Gopher-style repetition quality metrics (Rae et al. 2021, appendix A1.1
+    — the public webtext repetition filters). Per doc:
 
+      top2gram_char_frac  characters covered by the most frequent word bigram
+                          (count x gram chars; count ties broken by larger
+                          char mass) / total bigram characters — the
+                          CHARACTER fraction Rae et al. publish the 0.20
+                          threshold for (ADVICE r5 #1; an earlier revision
+                          applied it to the occurrence-count fraction).
+                          Gram chars = token chars + single separators,
+                          overlaps counted per occurrence — the reproducible
+                          denominator when whitespace runs make raw document
+                          characters tokenizer-dependent; the DuckDB oracle
+                          shares the definition exactly.
+      dup5gram_frac       occurrences beyond the first of repeated word
+                          5-grams / total 5-grams
+      dup5gram_char_frac  same, weighted by gram character length
+      dup_line_frac       occurrences beyond the first of repeated non-empty
+                          trimmed lines / total such lines
+      dup_line_char_frac  same, weighted by line character length
+      flagged             true when any metric crosses its Gopher threshold
+                          (defaults are the published ones: 0.20 / 0.15 /
+                          0.30 / 0.20)
+
+    Scale design: every metric is a pure per-document function, so all six
+    columns come out of one Arrow-batched ``mapInPandas`` pass that runs a
+    per-doc Python Counter loop — ONE corpus scan, ZERO shuffles. Two
+    alternatives were measured and removed (BENCH/BASELINE.md rounds 6-7):
+    a JVM expression form with higher-order-function lambdas, which
+    Catalyst evaluates INTERPRETED (no whole-stage codegen, boxed
+    per-element allocation; jstack on a 1.6M-doc run of ~300-token pages
+    showed ~100us per gram, ~75 minutes for the gram stage alone against
+    seconds for the Arrow pass, plus two shuffles); and a batch-wide numpy
+    kernel (factorize + 64-bit mixed gram keys + bincount), ~2x SLOWER
+    than the Counter loop (3.0s vs 1.65s per 10k x 300-token batch: 4-5
+    full passes over the token stream where Counter makes one
+    cache-resident pass). The DuckDB oracle in ``__spark_entry__`` pins
+    the values (tests/test_stages.py).
+
+    Semantics, token for token with the oracle: single-space split keeps
+    empty tokens, lines are trimmed of SPACES ONLY (``strip(" ")`` —
+    Python's bare strip would also eat \\r/\\t, diverging from the
+    oracle's trim), gram char length is the joined-string length (token
+    chars + single separators), and the most-frequent-bigram tie-break is
+    (count, char mass), the lexicographic struct max of the oracle.
+    """
     schema = T.StructType([
         T.StructField("doc_id", T.LongType()),
         T.StructField("top2gram_char_frac", T.DoubleType()),
@@ -288,9 +320,9 @@ def _repetition_stats_arrow(
         # grams are counted as TOKEN TUPLES (n pointer hashes per gram, no
         # string building); char mass = token chars + single separators ==
         # len(" ".join(gram)), computed once per DISTINCT gram — identical
-        # values to the string form, measured ~3x faster. NULL text behaves
-        # like the expression path (split(NULL) -> no gram rows -> all-zero
-        # fractions, unflagged) instead of crashing the batch.
+        # values to the string form, measured ~3x faster. NULL text gives
+        # all-zero fractions, unflagged, like the oracle (split(NULL) -> no
+        # gram rows) instead of crashing the batch.
         text = text or ""
         toks = text.split(" ")
         top2 = 0.0
@@ -351,362 +383,7 @@ def _repetition_stats_arrow(
                 "flagged": [v[5] for v in vals],
             })
 
-    def _np_batch_metrics(texts):
-        """Batch-wide numpy kernel (VERDICT r6 #3): ONE pd.factorize over the
-        batch's flat token stream, then 64-bit avalanche-mixed (doc, gram)
-        keys — the same accepted xxhash64 collision posture as _shingles_df —
-        and ONE hash-based pd.factorize per gram family for counting, with
-        bincount/scatter rollups. No sorts: a first draft built EXACT
-        hierarchical gram codes with np.unique and measured 7x SLOWER than
-        the Counter loop (np.unique's argsort + return_index dominate);
-        hash factorization is O(L) and the winning shape (A/B in
-        BENCH/BASELINE.md round 7). Counts are integers and every final
-        division is the same IEEE double op as the Counter path, so values
-        are bit-identical on collision-free inputs (parity-gated in
-        tests/test_stages.py; a 64-bit in-batch gram collision — odds
-        ~L^2/2^64 — merges two gram counts, the posture the engine already
-        accepts for shingles). Lines use EXACT packed keys (line codes are
-        always < 2^32), no hashing."""
-        import numpy as np
-        import pandas as pd
-
-        n_d = len(texts)
-        top2 = np.zeros(n_d, dtype=np.float64)
-        d5 = np.zeros(n_d, dtype=np.float64)
-        d5c = np.zeros(n_d, dtype=np.float64)
-        dl = np.zeros(n_d, dtype=np.float64)
-        dlc = np.zeros(n_d, dtype=np.float64)
-
-        M1 = np.uint64(0xBF58476D1CE4E5B9)
-        M2 = np.uint64(0x94D049BB133111EB)
-
-        def mix(h, c):
-            # splitmix64 finalizer over (h + c), wrapping uint64 math,
-            # in-place to avoid temp arrays. The seed/doc id MUST pass
-            # through a mix step ALONE before any token code joins: adding
-            # two raw small ints first (did + c0 both < 2^20) collapses
-            # thousands of distinct (doc, token) pairs onto equal sums
-            # before any avalanche — measured 741 collisions per 10M keys
-            # vs 0 with the did-first chain.
-            h = h + c
-            h ^= h >> np.uint64(30)
-            h *= M1
-            h ^= h >> np.uint64(27)
-            h *= M2
-            h ^= h >> np.uint64(31)
-            return h
-
-        def counts_per_key(keys, did_g, gl):
-            """Occurrence counts per distinct (doc, gram) key via one hash
-            factorize. did and gl are constant per key, so scatters (last
-            write wins) recover them per distinct key."""
-            codes_k, _ = pd.factorize(keys)
-            n_u = int(codes_k.max()) + 1 if len(codes_k) else 0
-            cnt = np.bincount(codes_k, minlength=n_u)
-            gl_u = np.empty(n_u, dtype=np.int64)
-            gl_u[codes_k] = gl
-            did_u = np.empty(n_u, dtype=np.int64)
-            did_u[codes_k] = did_g
-            return did_u, cnt, gl_u
-
-        # ---- token stream (split(" ") keeps empty tokens, NULL -> "") ----
-        toks_per_doc = [(t if isinstance(t, str) else "").split(" ")
-                        for t in texts]
-        n_toks = np.fromiter(
-            (len(t) for t in toks_per_doc), dtype=np.int64, count=n_d
-        )
-        flat = [tok for toks in toks_per_doc for tok in toks]
-        L = len(flat)
-        did = np.repeat(np.arange(n_d, dtype=np.int64), n_toks)
-        didu = did.astype(np.uint64)
-        codes, uniq = pd.factorize(np.asarray(flat, dtype=object))
-        cu = codes.astype(np.uint64)
-        uniq_lens = np.fromiter(
-            (len(u) for u in uniq), dtype=np.int64, count=len(uniq)
-        )
-        # prefix char sums: gram char mass = token chars + separators,
-        # window-summed in O(1) per position
-        cs = np.concatenate((
-            np.zeros(1, dtype=np.int64), np.cumsum(uniq_lens[codes])
-        ))
-
-        if L >= 2:
-            v2 = did[:-1] == did[1:]
-            k2 = mix(mix(mix(np.uint64(0x2222), didu[:-1]), cu[:-1]), cu[1:])
-            gl2 = cs[2:] - cs[:-2] + 1
-            did2, cnt2, gl2u = counts_per_key(
-                k2[v2], did[:-1][v2], gl2[v2]
-            )
-            cm = cnt2 * gl2u
-            chars2 = np.bincount(
-                did2, weights=cm.astype(np.float64), minlength=n_d
-            )
-            # per-doc lexicographic max of (count, char mass) — the Counter
-            # path's max(items2) — as two scatter-max passes: max count per
-            # doc, then max char mass among the max-count grams
-            mc = np.zeros(n_d, dtype=np.int64)
-            np.maximum.at(mc, did2, cnt2)
-            sel = cnt2 == mc[did2]
-            top_cm = np.zeros(n_d, dtype=np.float64)
-            np.maximum.at(top_cm, did2[sel], cm[sel].astype(np.float64))
-            np.divide(top2 + top_cm, chars2, out=top2, where=chars2 > 0)
-
-            if L >= 5:
-                v5 = did[: L - 4] == did[4:]
-                h = mix(mix(np.uint64(0x5555), didu[: L - 4]), cu[: L - 4])
-                for j in range(1, 5):
-                    h = mix(h, cu[j: L - 4 + j])
-                gl5 = (cs[5:] - cs[:-5] + 4)[v5]
-                did5v = did[: L - 4][v5]
-                did5u, cnt5, gl5u = counts_per_key(h[v5], did5v, gl5)
-                total5 = np.bincount(did5v, minlength=n_d)
-                dup5 = total5 - np.bincount(did5u, minlength=n_d)
-                chars5 = np.bincount(
-                    did5v, weights=gl5.astype(np.float64), minlength=n_d
-                )
-                # sum (cnt-1)*gl over all grams = occurrences - distinct
-                dup5c_chars = chars5 - np.bincount(
-                    did5u, weights=gl5u.astype(np.float64), minlength=n_d
-                )
-                np.divide(dup5, total5, out=d5, where=total5 > 0)
-                np.divide(dup5c_chars, chars5, out=d5c, where=chars5 > 0)
-
-        # ---- lines (trim SPACES only, drop empties — mirrors F.trim) ----
-        lines_per_doc = [
-            [s for s in (x.strip(" ") for x in
-                         (t if isinstance(t, str) else "").split("\n")) if s]
-            for t in texts
-        ]
-        flat_lines = [x for ls in lines_per_doc for x in ls]
-        if flat_lines:
-            n_lines = np.fromiter(
-                (len(ls) for ls in lines_per_doc), dtype=np.int64, count=n_d
-            )
-            ldid = np.repeat(np.arange(n_d, dtype=np.int64), n_lines)
-            lcodes, luniq = pd.factorize(np.asarray(flat_lines, dtype=object))
-            llens = np.fromiter(
-                (len(u) for u in luniq), dtype=np.int64, count=len(luniq)
-            )[lcodes]
-            # exact packed key: line codes < 2^32 always, no hashing needed
-            kdl = (ldid.astype(np.uint64) << np.uint64(32)) \
-                | lcodes.astype(np.uint64)
-            didlu, cntl, llen_u = counts_per_key(kdl, ldid, llens)
-            totall = np.bincount(ldid, minlength=n_d)
-            dupl = totall - np.bincount(didlu, minlength=n_d)
-            charsl = np.bincount(
-                ldid, weights=llens.astype(np.float64), minlength=n_d
-            )
-            duplc = charsl - np.bincount(
-                didlu, weights=llen_u.astype(np.float64), minlength=n_d
-            )
-            np.divide(dupl, totall, out=dl, where=totall > 0)
-            np.divide(duplc, charsl, out=dlc, where=charsl > 0)
-
-        flagged = (
-            (top2 > top2gram_max) | (d5c > dup5gram_char_max)
-            | (dl > dup_line_max) | (dlc > dup_line_char_max)
-        )
-        return top2, d5, d5c, dl, dlc, flagged
-
-    def batch_np(it):
-        for pdf in it:
-            top2, d5, d5c, dl, dlc, flagged = _np_batch_metrics(
-                list(pdf["text"])
-            )
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"].to_numpy(),
-                "top2gram_char_frac": top2,
-                "dup5gram_frac": d5,
-                "dup5gram_char_frac": d5c,
-                "dup_line_frac": dl,
-                "dup_line_char_frac": dlc,
-                "flagged": flagged,
-            })
-
-    if kernel not in ("counter", "numpy"):
-        raise ValueError(f"kernel must be 'counter' or 'numpy', got {kernel!r}")
-    fn = batch_np if kernel == "numpy" else batch
-    return docs.select("doc_id", "text").mapInPandas(fn, schema=schema)
-
-
-def repetition_stats(
-    docs: DataFrame,
-    top2gram_max: float = 0.20,
-    dup5gram_char_max: float = 0.15,
-    dup_line_max: float = 0.30,
-    dup_line_char_max: float = 0.20,
-    impl: str = "arrow",
-) -> DataFrame:
-    """Gopher-style repetition quality metrics (Rae et al. 2021, appendix A1.1
-    — the public webtext repetition filters). Per doc:
-
-      top2gram_char_frac  characters covered by the most frequent word bigram
-                          (count x gram chars; count ties broken by larger
-                          char mass) / total bigram characters — the
-                          CHARACTER fraction Rae et al. publish the 0.20
-                          threshold for (ADVICE r5 #1; an earlier revision
-                          applied it to the occurrence-count fraction).
-                          Gram chars = token chars + single separators,
-                          overlaps counted per occurrence — the reproducible
-                          denominator when whitespace runs make raw document
-                          characters tokenizer-dependent; the DuckDB oracle
-                          shares the definition exactly.
-      dup5gram_frac       occurrences beyond the first of repeated word
-                          5-grams / total 5-grams
-      dup5gram_char_frac  same, weighted by gram character length
-      dup_line_frac       occurrences beyond the first of repeated non-empty
-                          trimmed lines / total such lines
-      dup_line_char_frac  same, weighted by line character length
-      flagged             true when any metric crosses its Gopher threshold
-                          (defaults are the published ones: 0.20 / 0.15 /
-                          0.30 / 0.20)
-
-    Scale design — a MEASURED REVERSAL (round 6): every metric is a pure
-    per-document function, so the default ``impl="arrow"`` computes all six
-    columns inside one Arrow-batched ``mapInPandas`` pass — ONE corpus scan,
-    ZERO shuffles. Round 7 built a batch-wide vectorized counting kernel
-    (factorize over the batch token stream + 64-bit mixed gram keys +
-    hash-factorize counting, see _np_batch_metrics) expecting a win — and
-    MEASURED THE REVERSE: the per-doc Counter loop is ~2x faster (1.65s vs
-    3.0s per 10k x 300-token batch; the numpy floor is 4-5 full passes over
-    the token stream where Counter makes one cache-resident pass). The
-    Counter kernel stays the default; the numpy kernel is kept as
-    ``impl="arrow_numpy"``, the committed loser the parity test pins the
-    winner against (same discipline as ``impl="expr"``; A/B + the hash
-    collision lesson in BENCH/BASELINE.md round 7). The previous
-    expression
-    implementation (kept as ``impl="expr"``, value-parity gated in
-    tests/test_stages.py) looked like the "fast JVM path" but is not:
-    Catalyst evaluates higher-order-function lambdas INTERPRETED — no
-    whole-stage codegen, boxed per-element allocation — and jstack on a
-    1.6M-doc run of ~300-token pages showed executors pinned inside
-    Slice/HashExpression/CreateNamedStruct at ~100us per gram: ~75 minutes
-    for the gram stage alone, vs seconds for the Arrow pass over the same
-    input. The per-doc results are bit-identical either way (integer counts;
-    the fractions are the same IEEE double divisions), so the DuckDB oracle
-    is shared. The expr path's two shuffles (gram agg + per-doc agg) also
-    simply disappear.
-    """
-    if impl in ("arrow", "arrow_numpy"):
-        return _repetition_stats_arrow(
-            docs, top2gram_max, dup5gram_char_max, dup_line_max,
-            dup_line_char_max,
-            kernel="numpy" if impl == "arrow_numpy" else "counter",
-        )
-    if impl != "expr":
-        raise ValueError(
-            f"impl must be 'arrow', 'arrow_numpy' or 'expr', got {impl!r}"
-        )
-    # kinded (doc_id, kind, gh, glen) rows; gh = xxhash64 gram key.
-    # The token array is projected ONCE per row and the gram lambdas
-    # reference the attribute: higher-order-function lambdas are interpreted
-    # (no whole-stage codegen, no common-subexpression elimination inside),
-    # so an inlined split(text) re-tokenized the document for EVERY gram
-    # position — O(tokens^2) per doc, measured ~40 min for this stage alone
-    # on a 1.6M-doc corpus of ~300-token pages vs ~1 min with the
-    # pre-projected array (round-6 scale smoke; values bit-identical).
-    def _gram_rows(n: int, kind: str) -> DataFrame:
-        toked = docs.select("doc_id", F.split(F.col("text"), " ").alias("t"))
-        entry = F.expr(
-            f"transform(sequence(0, size(t) - {n}), i -> "
-            f"struct(xxhash64(slice(t, i + 1, {n})) AS gh, "
-            f"aggregate(slice(t, i + 1, {n}), 0, "
-            f"(a, x) -> a + length(x)) + {n - 1} AS glen))"
-        )
-        guarded = F.when(F.size(F.col("t")) >= n, entry).otherwise(
-            F.expr("array()").cast("array<struct<gh:bigint,glen:int>>")
-        )
-        return toked.select(
-            "doc_id", F.lit(kind).alias("kind"), F.explode(guarded).alias("g")
-        ).select("doc_id", "kind", F.col("g.gh").alias("gh"), F.col("g.glen").alias("glen"))
-
-    lines = F.filter(
-        F.transform(F.split(F.col("text"), "\n"), lambda x: F.trim(x)),
-        lambda x: x != F.lit(""),
-    )
-    line_rows = docs.select(
-        "doc_id", F.lit("line").alias("kind"), F.explode(lines).alias("line")
-    ).select(
-        "doc_id", "kind",
-        F.xxhash64("line").alias("gh"),
-        F.length("line").alias("glen"),
-    )
-
-    ex = _gram_rows(2, "g2").unionByName(_gram_rows(5, "g5")).unionByName(line_rows)
-    counts = ex.groupBy("doc_id", "kind", "gh").agg(
-        F.count("*").alias("c"), F.max("glen").alias("glen")
-    )
-
-    def _tot(kind):
-        return F.sum(F.when(F.col("kind") == kind, F.col("c")))
-
-    def _dup(kind):
-        return F.sum(
-            F.when((F.col("kind") == kind) & (F.col("c") > 1), F.col("c") - 1)
-        )
-
-    def _tot_chars(kind):
-        return F.sum(F.when(F.col("kind") == kind, F.col("glen") * F.col("c")))
-
-    def _dup_chars(kind):
-        return F.sum(
-            F.when(
-                (F.col("kind") == kind) & (F.col("c") > 1),
-                F.col("glen") * (F.col("c") - 1),
-            )
-        )
-
-    per_doc = counts.groupBy("doc_id").agg(
-        _tot("g2").alias("g2_total"),
-        # most-frequent bigram's char mass: lexicographic struct max picks
-        # max count, ties broken by larger (glen * c) — deterministic on
-        # both engines (DuckDB max() orders structs the same way)
-        F.max(
-            F.when(
-                F.col("kind") == "g2",
-                F.struct(
-                    F.col("c").alias("c"),
-                    (F.col("glen") * F.col("c")).alias("cm"),
-                ),
-            )
-        )["cm"].alias("g2_top_chars"),
-        _tot_chars("g2").alias("g2_chars"),
-        _tot("g5").alias("g5_total"),
-        _dup("g5").alias("g5_dup"),
-        _tot_chars("g5").alias("g5_chars"),
-        _dup_chars("g5").alias("g5_dup_chars"),
-        _tot("line").alias("line_total"),
-        _dup("line").alias("line_dup"),
-        _tot_chars("line").alias("line_chars"),
-        _dup_chars("line").alias("line_dup_chars"),
-    )
-
-    def _frac(num: str, den: str):
-        return F.when(
-            F.col(den) > 0,
-            F.coalesce(F.col(num), F.lit(0)).cast("double")
-            / F.col(den).cast("double"),
-        ).otherwise(F.lit(0.0))
-
-    out = (
-        docs.select("doc_id")
-        .join(per_doc, "doc_id", "left")
-        .select(
-            "doc_id",
-            _frac("g2_top_chars", "g2_chars").alias("top2gram_char_frac"),
-            _frac("g5_dup", "g5_total").alias("dup5gram_frac"),
-            _frac("g5_dup_chars", "g5_chars").alias("dup5gram_char_frac"),
-            _frac("line_dup", "line_total").alias("dup_line_frac"),
-            _frac("line_dup_chars", "line_chars").alias("dup_line_char_frac"),
-        )
-    )
-    return out.withColumn(
-        "flagged",
-        (F.col("top2gram_char_frac") > top2gram_max)
-        | (F.col("dup5gram_char_frac") > dup5gram_char_max)
-        | (F.col("dup_line_frac") > dup_line_max)
-        | (F.col("dup_line_char_frac") > dup_line_char_max),
-    )
+    return docs.select("doc_id", "text").mapInPandas(batch, schema=schema)
 
 
 # PII patterns restricted to syntax with identical semantics in Java regex

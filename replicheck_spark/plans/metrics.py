@@ -45,24 +45,26 @@ class MetricsSink:
             path if ":" in path else os.path.abspath(path))
 
     def record_stage(self, stage: str, rows_in: int, rows_out: int,
-                     wall_ms: int, dropped: int = 0) -> None:
+                     wall_ms: int) -> None:
         """One row per output file of ``stage`` + a stage-total row carrying
-        the caller's write-time ``df.observe`` count ``rows_out``."""
+        the caller's write-time ``df.observe`` count ``rows_out``.
+        ``dropped`` is 0: a stage's filtering shows as rows_in - rows_out,
+        and caps are recorded through ``record_totals``."""
         per_file = self.io.file_row_counts(stage)
         if sum(per_file) != rows_out:
             raise LineageMismatchError(
                 f"stage {stage!r}: output files hold {sum(per_file)} rows, "
                 f"its write observed {rows_out}")
-        self._append(stage, [(pid, rows_in, n, dropped, wall_ms)
+        self._append(stage, [(pid, rows_in, n, 0, wall_ms)
                              for pid, n in enumerate(per_file)]
-                     + [(-1, rows_in, rows_out, dropped, wall_ms)])
+                     + [(-1, rows_in, rows_out, 0, wall_ms)])
 
-    def record_totals(self, stage: str, rows_out: int = -1, dropped: int = 0,
-                      rows_in: int = -1, wall_ms: int = 0) -> None:
-        """Stage-total-only row (partition_id=-1) for counters that ride a
-        ``df.observe`` on another stage's action (capped-bucket overflow,
+    def record_totals(self, stage: str, rows_out: int = -1,
+                      dropped: int = 0) -> None:
+        """Stage-total-only row (partition_id=-1, rows_in -1, wall_ms 0) for
+        counters that ride another stage's action (capped-bucket overflow,
         anchor index volume) — no per-partition breakdown, no extra job."""
-        self._append(stage, [(-1, rows_in, rows_out, dropped, wall_ms)])
+        self._append(stage, [(-1, -1, rows_out, dropped, 0)])
 
     def _append(self, stage: str, rows: list[tuple]) -> None:
         table = pa.Table.from_arrays(

@@ -192,13 +192,7 @@ def _run_dedup_stages(
     # — the r3 pipeline recorded cands_capped dropped=0 unconditionally).
     deferred_metrics: list[tuple[str, DataFrame, list]] = []
 
-    import os as _os
-    import sys as _sys
-    import time as _time
-
-    _timing = bool(_os.environ.get("SPARK_GRAFT_STAGE_TIMING"))
-
-    def stage(name: str, build, rows_in: str | None = None, dropped=0):
+    def stage(name: str, build, rows_in: str | None = None):
         """Run (or resume) one stage: build() -> DataFrame, checkpointed.
 
         rows_in names the UPSTREAM stage whose observed rows_out feeds this
@@ -210,12 +204,7 @@ def _run_dedup_stages(
             # but WITHOUT a dedicated job barrier per stage — each eager
             # barrier cost ~1-2s of driver round-trip, a pure serial-floor
             # tax at any core count
-            _t0 = _time.monotonic()
-            out = build().localCheckpoint(eager=_timing)
-            if _timing:
-                print(f"[stage] {name} {_time.monotonic() - _t0:.1f}s",
-                      file=_sys.stderr, flush=True)
-            return out
+            return build().localCheckpoint(eager=False)
         if io.exists(name):
             return io.read(name)
         with StageTimer() as t:
@@ -226,13 +215,10 @@ def _run_dedup_stages(
             )
             observed[name] = int(obs.get["rows_out"])
             built.add(name)
-        if _timing:
-            print(f"[stage] {name} {t.wall_ms / 1000:.1f}s",
-                  file=_sys.stderr, flush=True)
         out = io.read(name)
         if collect_metrics:
             sink.record_stage(name, observed.get(rows_in, -1), observed[name],
-                              t.wall_ms, int(dropped))
+                              t.wall_ms)
         return out
 
     docs = stage("docs", lambda: extract_docs(pages))

@@ -1,6 +1,7 @@
 #!/usr/bin/env python3
 """Identical-plan campaign runner: the dedup job (jobs/dedup.py) in a FRESH
-JVM per run, interleaved across levels/variants, best-of-N per cell.
+JVM per run, interleaved across levels and env overlays, best-of-N per
+cell.
 
 Used for two kinds of committed evidence (BENCH/*.md):
 
@@ -9,8 +10,8 @@ Used for two kinds of committed evidence (BENCH/*.md):
   at two parallelism levels — local[8] vs local[32], or the multi-JVM proxy
   local-cluster[1,8,M] vs local-cluster[4,8,M] (N -> 4N executor JVMs, each
   with its own heap/GC).
-* A/B: same master, two engine variants (e.g. --variants text jvm for
-  DedupConfig.shingle_source).
+* A/B: same master, interleaved env overlays (``--envsets``, e.g.
+  '' 'SPARK_GRAFT_IO_CODEC=zstd').
 
 Interleaving (level0, level1, level0, level1, ...) makes co-tenant noise hit
 both cells alike; fresh subprocesses make every run cold-JVM comparable.
@@ -37,8 +38,7 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def run_once(master: str, variant: str | None, args, tag: str,
-             envset: str = "") -> dict:
+def run_once(master: str, args, tag: str, envset: str = "") -> dict:
     # Checkpoints MUST live on tmpfs: this host's shared virtio disk loses
     # throughput under concurrent writers AND stalls a 1-core run harder
     # than a 4-core one (no compute to overlap I/O with), so disk-backed
@@ -62,8 +62,6 @@ def run_once(master: str, variant: str | None, args, tag: str,
         "--ckpt", ckpt, "--run-id", tag, "--master", master,
         "--output-format", "json",
     ]
-    if variant:
-        cmd += ["--shingle-source", variant]
     if args.no_substr:
         cmd += ["--no-substr"]
     t0 = time.monotonic()
@@ -77,7 +75,7 @@ def run_once(master: str, variant: str | None, args, tag: str,
     m = re.search(r"^\{.*\}$", p.stdout, re.MULTILINE | re.DOTALL)
     rep = json.loads(p.stdout[m.start():]) if m else {}
     out = {
-        "master": master, "variant": variant, "tag": tag, "envset": envset,
+        "master": master, "tag": tag, "envset": envset,
         "wall_sec": rep.get("wall_sec"), "docs": rep.get("docs"),
         "docs_per_sec": rep.get("docs_per_sec"), "proc_sec": round(total, 1),
     }
@@ -89,8 +87,6 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--pages", required=True)
     ap.add_argument("--masters", nargs="+", required=True)
-    ap.add_argument("--variants", nargs="*", default=[None],
-                    help="shingle-source values to A/B (default: config default)")
     ap.add_argument("--repeats", type=int, default=2)
     ap.add_argument("--shuffle", type=int, default=128)
     ap.add_argument("--advisory", default="16m")
@@ -105,21 +101,20 @@ def main() -> int:
     cells: dict[tuple, list] = {}
     for r in range(args.repeats):
         for master in args.masters:
-            for variant in args.variants:
-                for envset in args.envsets:
-                    # tag from the FULL envset string (ADVICE r5 #3: two
-                    # overlays sharing a trailing value, e.g. '*_CODEC=zstd'
-                    # vs 'OTHER=zstd', collided when only the last value was
-                    # used), plus a short hash so truncation cannot re-collide
-                    etag = (
-                        re.sub(r"[^A-Za-z0-9]", "", envset)[:12]
-                        + hashlib.sha1(envset.encode()).hexdigest()[:4]
-                        if envset else "base"
-                    )
-                    tag = (f"r{r}_{re.sub(r'[^A-Za-z0-9]', '', master)[:24]}_"
-                           f"{variant or 'def'}_{etag}")
-                    res = run_once(master, variant, args, tag, envset)
-                    cells.setdefault((master, variant, envset), []).append(res)
+            for envset in args.envsets:
+                # tag from the FULL envset string (ADVICE r5 #3: two
+                # overlays sharing a trailing value, e.g. '*_CODEC=zstd'
+                # vs 'OTHER=zstd', collided when only the last value was
+                # used), plus a short hash so truncation cannot re-collide
+                etag = (
+                    re.sub(r"[^A-Za-z0-9]", "", envset)[:12]
+                    + hashlib.sha1(envset.encode()).hexdigest()[:4]
+                    if envset else "base"
+                )
+                tag = (f"r{r}_{re.sub(r'[^A-Za-z0-9]', '', master)[:24]}_"
+                       f"{etag}")
+                res = run_once(master, args, tag, envset)
+                cells.setdefault((master, envset), []).append(res)
 
     print("\n== best-of per cell ==")
     best = {}
@@ -137,12 +132,11 @@ def main() -> int:
         m = re.fullmatch(r"local-cluster\[(\d+),(\d+),\d+\]", master)
         return int(m.group(1)) * int(m.group(2)) if m else 0
 
-    if len(args.masters) == 2 and len(args.variants) == 1:
+    if len(args.masters) == 2:
         (m_lo, m_hi) = sorted(args.masters, key=cores)
-        v = args.variants[0]
         for envset in args.envsets:
-            t_lo, _ = best[(m_lo, v, envset)]
-            t_hi, _ = best[(m_hi, v, envset)]
+            t_lo, _ = best[(m_lo, envset)]
+            t_hi, _ = best[(m_hi, envset)]
             speed = t_lo / t_hi
             ideal = cores(m_hi) / cores(m_lo)
             print(f"\n[{envset or 'baseline'}] speedup {speed:.3f}x of ideal "

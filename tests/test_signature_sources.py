@@ -1,103 +1,14 @@
-"""A/B parity for the signature stage's two shingle sources (DedupConfig.
-shingle_source): 'text' (norm_text crosses Arrow, Python hashes shingles) vs
-'jvm' (xxhash64 shingle hashes computed by JVM expressions, Python does pure
-numpy minhash/simhash/band math over array<long>).
+"""SimHash near-pair contract of the signature stage's shingle source.
 
-Contract under test:
-1. given the SAME shingle-hash arrays, the from-hashes UDF's outputs are
-   byte-identical to the text path's downstream math;
-2. the JVM shingle expression implements the tokenize semantics (distinct,
-   short-doc single shingle, empty -> empty);
-3. operator-level: minhash_lsh_pairs emits identical (a, b, jaccard) under
-   both sources on a planted corpus — hash-function choice is invisible to
-   every consumer because hashes are only equality-tested;
-4. end-to-end: run_dedup produces the same cluster partition under both.
+The signature stage has one shingle source: norm_text crosses Arrow and
+Python hashes the shingles. The test name keeps "both sources" from the time
+a JVM shingle source ran beside it; the contract it checks never depended on
+the source.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pytest
-from pyspark.sql import functions as F, types as T
-
 from replicheck_spark.config import DedupConfig
-from replicheck_spark.functions import hashing
-from replicheck_spark.functions.textnorm import shingle_strings, tokenize
-from replicheck_spark.functions.udfs import (
-    make_signature_from_hashes_udf,
-    make_signature_udf,
-)
-from replicheck_spark.operators.signatures import shingle_hash_expr
-
-TEXTS = [
-    " ".join(f"w{i}" for i in range(40)),            # normal doc
-    " ".join(f"w{i}" for i in range(40)),            # exact dup of above
-    "a b c",                                         # short doc (n < k)
-    "solo",                                          # single token
-    " ".join(f"x{i % 7}" for i in range(30)),        # repeated shingles
-]
-
-
-def test_from_hashes_udf_byte_identical_to_text_path_math(spark):
-    """Feed the TEXT path's own 64-bit shingle hashes into the from-hashes
-    UDF: every output field (32-bit shingles, anchors, simhash, bands) must
-    equal the text-input UDF's output exactly — same math, different entry
-    point."""
-    k, num_perm, bands, rows, seed, q = 5, 128, 32, 4, 42, 9
-
-    # text-path shingle hashes, computed with the same functions the text
-    # UDF uses internally
-    flat_tok, tok_off = hashing.hash_token_lists([tokenize(t) for t in TEXTS])
-    flat_sh, sh_off = hashing.shingle_hashes_flat(flat_tok, tok_off, k)
-    sh_lists = [
-        flat_sh[sh_off[i] : sh_off[i + 1]].view(np.int64).tolist()
-        for i in range(len(TEXTS))
-    ]
-
-    text_udf = make_signature_udf(k, num_perm, bands, rows, seed, anchor_q=q)
-    hash_udf = make_signature_from_hashes_udf(
-        num_perm, bands, rows, seed, anchor_q=q
-    )
-
-    df = spark.createDataFrame(
-        list(zip(range(len(TEXTS)), TEXTS, sh_lists)),
-        "id long, text string, sh array<long>",
-    )
-    a = {
-        r["id"]: r["sig"]
-        for r in df.select("id", text_udf("text").alias("sig")).collect()
-    }
-    b = {
-        r["id"]: r["sig"]
-        for r in df.select("id", hash_udf("sh").alias("sig")).collect()
-    }
-    for i in range(len(TEXTS)):
-        assert sorted(a[i]["shingles"]) == sorted(b[i]["shingles"]), i
-        assert sorted(a[i]["anchors"]) == sorted(b[i]["anchors"]), i
-        assert a[i]["simhash"] == b[i]["simhash"], i
-        assert list(a[i]["bands"]) == list(b[i]["bands"]), i
-
-
-def test_shingle_hash_expr_tokenize_semantics(spark):
-    """JVM shingle expression: one hash per DISTINCT k-shingle string, one
-    shingle for short docs, empty array for empty text — matching
-    textnorm.shingle_strings cardinalities."""
-    k = 5
-    rows_in = [(i, t) for i, t in enumerate(TEXTS)] + [(99, "")]
-    df = spark.createDataFrame(rows_in, "id long, text string")
-    got = {
-        r["id"]: r["sh"]
-        for r in df.select(
-            "id", shingle_hash_expr("text", k).alias("sh")
-        ).collect()
-    }
-    for i, t in enumerate(TEXTS):
-        expect = len(shingle_strings(tokenize(t), k))
-        assert len(got[i]) == expect, (i, t)
-        assert len(set(got[i])) == len(got[i])  # distinct
-    assert got[99] == []  # empty text -> no shingles
-    # exact dup docs -> identical shingle hash sets
-    assert sorted(got[0]) == sorted(got[1])
 
 
 def _planted_docs(spark):
@@ -118,81 +29,31 @@ def _planted_docs(spark):
     )
 
 
-def test_minhash_lsh_pairs_equal_under_both_sources(spark):
-    """Operator-level invariance: identical (a, b, jaccard) under
-    shingle_source='text' and 'jvm' on a planted corpus with clear margins —
-    Jaccard is a set-cardinality statistic, so the hash choice only matters
-    at ~2^-32-collision granularity."""
-    from replicheck_spark.operators import dedup_ops
-
-    docs = _planted_docs(spark)
-    out = {}
-    for src in ("text", "jvm"):
-        df = dedup_ops.minhash_lsh_pairs(docs, DedupConfig(shingle_source=src))
-        out[src] = sorted(
-            (r["a"], r["b"], round(r["jaccard"], 9)) for r in df.collect()
-        )
-    assert out["text"] == out["jvm"]
-    assert len(out["text"]) > 0  # the planted dups were actually found
-
-
 def test_simhash_pairs_contract_holds_under_both_sources(spark):
-    """SimHash values are HASH-DEPENDENT (bitwise majority over shingle
-    hashes), so near-pair sets legitimately differ between sources at the
-    Hamming margin — exact cross-source equality is NOT the contract (and
-    same-sha pairs are excluded by design: identical text is the exact
-    stage's job). What must hold under both sources: the planted one-token-
-    apart family is detected, every emitted pair respects the radius, and
-    members of an identical-text group carry identical near edges (the
-    member-expansion contract, which IS hash-invariant)."""
+    """SimHash values are hash-dependent (bitwise majority over shingle
+    hashes), and same-sha pairs are excluded by design: identical text is
+    the exact stage's job. What must hold: the planted one-token-apart
+    family is detected, every emitted pair respects the radius, and members
+    of an identical-text group carry identical near edges (the
+    member-expansion contract)."""
     from replicheck_spark.operators import dedup_ops
 
     docs = _planted_docs(spark)
-    for src in ("text", "jvm"):
-        cfg = DedupConfig(shingle_source=src)
-        got = {
-            (r["a"], r["b"]): r["hamming"]
-            for r in dedup_ops.simhash_pairs(docs, cfg).collect()
-        }
-        assert got, src  # planted near family detected
-        assert all(h <= cfg.hamming_max for h in got.values()), src
-        # expansion contract: doc 200 has identical text to doc 0, so for
-        # every partner p of 0 (other than 200's own sha group), the pair
-        # (p, 200) must exist with the same hamming
-        partners = {b: h for (a, b), h in got.items() if a == 0}
-        partners.update({a: h for (a, b), h in got.items() if b == 0})
-        assert partners, src
-        for p, h in partners.items():
-            if p == 200:
-                continue
-            key = (min(p, 200), max(p, 200))
-            assert got.get(key) == h, (src, key, got.get(key), h)
-
-
-@pytest.mark.slow
-def test_pipeline_clusters_equal_under_both_sources(spark, pages_small,
-                                                    tmp_path_factory):
-    """End to end: the full dedup pipeline partitions urls into the same
-    clusters under either shingle source."""
-    from replicheck_spark.plans.pipeline import run_dedup
-
-    pages, _, _ = pages_small
-
-    def partition(src):
-        ckpt = str(tmp_path_factory.mktemp(f"ab_{src}"))
-        res = run_dedup(
-            spark, pages, DedupConfig(shingle_source=src), ckpt,
-            run_id=f"ab_{src}",
-        )
-        rows = res.labels.join(
-            res.docs.select("doc_id", "url"), "doc_id"
-        ).collect()
-        clusters = {}
-        for r in rows:
-            clusters.setdefault(r["cluster_id"], set()).add(r["url"])
-        return sorted(
-            (frozenset(v) for v in clusters.values() if len(v) >= 2),
-            key=sorted,
-        )
-
-    assert partition("text") == partition("jvm")
+    cfg = DedupConfig()
+    got = {
+        (r["a"], r["b"]): r["hamming"]
+        for r in dedup_ops.simhash_pairs(docs, cfg).collect()
+    }
+    assert got  # planted near family detected
+    assert all(h <= cfg.hamming_max for h in got.values())
+    # expansion contract: doc 200 has identical text to doc 0, so for every
+    # partner p of 0 (other than 200's own sha group), the pair (p, 200)
+    # must exist with the same hamming
+    partners = {b: h for (a, b), h in got.items() if a == 0}
+    partners.update({a: h for (a, b), h in got.items() if b == 0})
+    assert partners
+    for p, h in partners.items():
+        if p == 200:
+            continue
+        key = (min(p, 200), max(p, 200))
+        assert got.get(key) == h, (key, got.get(key), h)

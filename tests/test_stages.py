@@ -3,6 +3,7 @@ contract (reference test_detector.py:8-33 analog), signature UDF == direct
 numpy functions, LSH candidates, confirm, connected components, substring."""
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from replicheck_spark.config import DedupConfig
@@ -446,19 +447,13 @@ class TestRepetitionStats:
         assert abs(out[5]["top2gram_char_frac"] - 0.5) < 1e-12
         assert out[5]["dup5gram_frac"] == 0.0
 
-    def test_expr_impl_udf_free_and_arrow_parity(self, spark):
-        """Round-6 measured reversal: the default impl is the Arrow-batched
-        per-doc pass (Catalyst higher-order lambdas are INTERPRETED — the
-        'UDF-free' expression path pinned executors at ~100us/gram on
-        300-token docs, ~75 min for 1.6M docs vs seconds via Arrow). The
-        expression path is kept behind impl='expr': it must stay UDF-free
-        (its reason to exist) and BIT-IDENTICAL to the Arrow default on docs
-        covering every metric, the tie-breaks, and the degenerate cases."""
+    def test_matches_duckdb_oracle(self, spark):
+        """repetition_stats equals the driver's DuckDB oracle row for row on
+        docs covering every metric, the tie-breaks, the degenerate cases,
+        a \\r\\n doc and a space-padded line."""
+        duckdb = pytest.importorskip("duckdb")
+        import __spark_entry__ as entry_mod
         from replicheck_spark.operators.textops import repetition_stats
-
-        docs = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
-        plan = repetition_stats(docs, impl="expr")._jdf.queryExecution().executedPlan().toString()
-        assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
         rows = [
             (1, "a b a b a b c d"),
@@ -470,18 +465,16 @@ class TestRepetitionStats:
             (7, "HEADER\r\nHEADER\r\nbody"),   # \r is NOT trimmed (spaces only)
             (8, "repeat me\nrepeat me\n  repeat me  "),  # pad-trim matching
         ]
-        big = spark.createDataFrame(rows, "doc_id long, text string")
-        arrow = sorted(map(tuple, repetition_stats(big).collect()))
-        expr = sorted(map(tuple, repetition_stats(big, impl="expr").collect()))
-        assert arrow == expr
-        # round-7 vectorization A/B: the batch-wide numpy kernel LOST the
-        # measurement (Counter loop ~2x faster per batch) and is kept as
-        # the committed loser — it must stay bit-identical to the default
-        # (same discipline as impl='expr'; BENCH/BASELINE.md round 7)
-        numpy_k = sorted(
-            map(tuple, repetition_stats(big, impl="arrow_numpy").collect())
-        )
-        assert arrow == numpy_k
+        docs = spark.createDataFrame(rows, "doc_id long, text string")
+        got = repetition_stats(docs)
+        con = duckdb.connect()
+        con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+        con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+        cur = con.execute(entry_mod.oracle_sql()["repetition_stats"])
+        assert [c[0] for c in cur.description] == got.columns
+        want = sorted(cur.fetchall())
+        assert len(want) == len(rows)
+        assert sorted(map(tuple, got.collect())) == want
 
 
 class TestPiiScrub:
