@@ -33,10 +33,13 @@ With every optional stage enabled the job covers the full published
 curation recipe: heuristics -> PII -> C4 lines -> CCNet windows ->
 decontamination -> MinHash near-dedup -> mixture weighting.
 
-Each stage output is a checkpointed table under --ckpt/--run-id with the
-same _SUCCESS/resume contract as jobs/dedup.py (re-run with the same ids →
-finished stages are read back). The report is per-stage lineage: rows in /
-rows out / dropped — capped or dropped work is counted, never silent.
+Each stage output is a checkpointed table under --ckpt/--run-id, run through
+the same stage runner as jobs/dedup.py (plans/stages.py): re-run with the
+same ids → finished stages are read back, their row counts taken from the
+parquet footers. The report is per-stage lineage: rows in / rows out /
+dropped — capped or dropped work is counted, never silent. The same counts,
+per output file too, land in the metrics table at --ckpt/--run-id/_metrics
+(FIXTURES.md §3), with no count job of their own.
 
 Usage (sandbox):
     python jobs/curate.py --synth 2000 --ckpt /tmp/cur --run-id demo
@@ -116,6 +119,8 @@ def main(argv=None) -> int:
     from replicheck_spark.config import DedupConfig
     from replicheck_spark.operators import dedup_ops, textops
     from replicheck_spark.operators.blocks import line_corpus_dedup
+    from replicheck_spark.plans.metrics import MetricsSink
+    from replicheck_spark.plans.stages import StageRunner
     from replicheck_spark.session import get_spark
     from replicheck_spark.sources.io import TableIO
 
@@ -126,26 +131,9 @@ def main(argv=None) -> int:
     spark = get_spark("replicheck_spark_curate", master=args.master)
     io = TableIO(spark, args.ckpt, args.run_id,
                  iceberg_catalog=args.iceberg_catalog)
-    report: dict[str, dict] = {}
+    runner = StageRunner(
+        io, MetricsSink(io, f"{args.ckpt}/{args.run_id}/_metrics"))
     t0 = time.monotonic()
-
-    def stage(name: str, rows_in: int, build):
-        """Resumable stage + lineage row. rows_in = -1 means unknown (a
-        resumed upstream whose input count was never re-measured)."""
-        if io.exists(name):
-            df = io.read(name)
-            resumed = True
-        else:
-            io.write(name, build())
-            df = io.read(name)
-            resumed = False
-        rows_out = df.count()
-        report[name] = {
-            "rows_in": rows_in, "rows_out": rows_out,
-            "dropped": (rows_in - rows_out) if rows_in >= 0 else -1,
-            "resumed": resumed,
-        }
-        return df, rows_out
 
     # ---- input ----------------------------------------------------------
     if args.synth is not None:
@@ -158,21 +146,22 @@ def main(argv=None) -> int:
     if args.pages is not None:
         from replicheck_spark.operators.extract import extract_docs
 
-        pages = spark.read.parquet(args.pages)
-        docs0, n0 = stage("docs", pages.count(), lambda: extract_docs(
-            pages
-        ).select(
+        raw = spark.read.parquet(args.pages)
+        build_docs = lambda: extract_docs(raw).select(  # noqa: E731
             F.col("doc_id"),
             F.col("norm_text").alias("text"),
             F.col("lang"),
             F.col("host").alias("source"),
-        ))
+        )
     else:
         raw = spark.read.parquet(args.docs)
-        docs0, n0 = stage("docs", raw.count(), lambda: raw.select(
+        build_docs = lambda: raw.select(  # noqa: E731
             "doc_id", "text",
             *(c for c in ("lang", "source") if c in raw.columns),
-        ))
+        )
+    n_raw = raw.count()
+    # the stages form one chain: each one's rows_in is its runner predecessor's
+    docs0 = runner.run("docs", build_docs)
 
     # ---- 1. quality + repetition signals (raw text) ---------------------
     def build_filtered():
@@ -184,7 +173,7 @@ def main(argv=None) -> int:
         ).select("doc_id")
         return docs0.join(keep, "doc_id", "left_semi")
 
-    filtered, n1 = stage("filtered", n0, build_filtered)
+    filtered = runner.run("filtered", build_filtered)
 
     # ---- 2. PII scrub ----------------------------------------------------
     def build_scrubbed():
@@ -193,11 +182,10 @@ def main(argv=None) -> int:
             "clean_text", "text"
         )
 
-    scrubbed, n2 = stage("scrubbed", n1, build_scrubbed)
+    scrubbed = runner.run("scrubbed", build_scrubbed)
 
     # ---- 3. line-level corpus-frequency dedup ---------------------------
     cur = scrubbed
-    n_cur = n2
     if not args.no_line_dedup:
         def build_lined():
             # keep_first: C4 semantics — repeated content is reduced to one
@@ -213,7 +201,7 @@ def main(argv=None) -> int:
             # (counted via the stage's rows_in - rows_out)
             return out.filter(F.trim(F.col("text")) != "")
 
-        cur, n_cur = stage("line_dedup", n2, build_lined)
+        cur = runner.run("line_dedup", build_lined)
 
     # ---- 4. optional CCNet window boilerplate removal --------------------
     if args.block_min_docs is not None:
@@ -231,7 +219,7 @@ def main(argv=None) -> int:
             # via the stage's rows_in - rows_out)
             return out.filter(F.trim(F.col("text")) != "")
 
-        cur, n_cur = stage("block_strip", n_cur, build_blocked)
+        cur = runner.run("block_strip", build_blocked)
 
     # ---- 5. optional decontamination -------------------------------------
     if args.bench is not None:
@@ -242,7 +230,7 @@ def main(argv=None) -> int:
             dirty = flags.filter(F.col("contaminated")).select("doc_id")
             return cur.join(dirty, "doc_id", "left_anti")
 
-        cur, n_cur = stage("decontaminated", n_cur, build_decon)
+        cur = runner.run("decontaminated", build_decon)
 
     # ---- 6. near-dedup (LSH edges + exact stars -> CC -> canonical) -----
     if not args.no_dedup:
@@ -262,7 +250,7 @@ def main(argv=None) -> int:
             ).select("doc_id")
             return pre_dedup.join(dropped, "doc_id", "left_anti")
 
-        cur, n_cur = stage("curated", n_cur, build_deduped)
+        cur = runner.run("curated", build_deduped)
 
     # ---- 7. optional deterministic source-mixture sampling ---------------
     if args.mix is not None:
@@ -290,9 +278,16 @@ def main(argv=None) -> int:
             ).select("doc_id")
             return pre_mix.join(keep, "doc_id", "left_semi")
 
-        cur, n_cur = stage("mixed", n_cur, build_mixed)
+        cur = runner.run("mixed", build_mixed)
 
     wall = time.monotonic() - t0
+    report, n_in = {}, n_raw
+    for name, n_out in runner.rows.items():
+        report[name] = {"rows_in": n_in, "rows_out": n_out,
+                        "dropped": n_in - n_out,
+                        "resumed": name in runner.resumed}
+        n_in = n_out
+    n0, n_cur = runner.rows["docs"], n_in
     out = {
         "stages": report,
         "docs_in": n0,

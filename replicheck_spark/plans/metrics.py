@@ -7,15 +7,16 @@ file of its committed output, counted from the parquet footers
 plus a total row: the write's ``df.observe`` count, which the file counts must
 sum to. Each record call is one parquet file the driver writes with pyarrow
 under a ``.``-prefixed name, then renames, so a killed append leaves nothing
-Spark or pyarrow would read. Unlike the reference (tqdm progress, silent
-per-file error suppression, cli.py:99, runner.py:90-92), caps and drops land
-here; unknown counts (rows_in of a resumed stage) are -1, never fabricated.
+Spark or pyarrow would read. Both jobs record through the stage runner
+(``plans/stages.py``): built stages only, rows_in = the upstream's count (its
+footers' if resumed). Unlike the reference (tqdm progress, silent per-file
+error suppression, cli.py:99, runner.py:90-92), caps and drops land here;
+unknown counts (rows_in of the raw input) are -1, never fabricated.
 """
 
 from __future__ import annotations
 
 import os
-import time
 import uuid
 
 import pyarrow as pa
@@ -78,14 +79,10 @@ class MetricsSink:
         self.fs.move(f"{self.root}/.{name}", f"{self.root}/{name}")
 
     def read(self) -> DataFrame:
-        return self.io.spark.read.schema(METRICS_SCHEMA).parquet(self.path)
-
-
-class StageTimer:
-    def __enter__(self):
-        self.t0 = time.monotonic()
-        return self
-
-    def __exit__(self, *exc):
-        self.wall_ms = int((time.monotonic() - self.t0) * 1000)
-        return False
+        # the part files, not the dir: Spark skips (and warns about) a leaf
+        # dir named ``_metrics`` as hidden; no parts yet reads as empty
+        files = self.fs.get_file_info(
+            pafs.FileSelector(self.root, allow_not_found=True))
+        return self.io.spark.read.schema(METRICS_SCHEMA).parquet(*(
+            f"{self.path.rstrip('/')}/{f.base_name}" for f in files
+            if not f.base_name.startswith(("_", "."))))

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from replicheck_spark.config import DedupConfig
 from replicheck_spark.operators.components import (
@@ -29,7 +29,8 @@ from replicheck_spark.operators.extract import eligible_docs, extract_docs
 from replicheck_spark.operators.lsh import candidate_pairs, explode_bands
 from replicheck_spark.operators.signatures import compute_signatures
 from replicheck_spark.operators.substr import anchor_pairs, substr_edges
-from replicheck_spark.plans.metrics import MetricsSink, StageTimer
+from replicheck_spark.plans.metrics import MetricsSink
+from replicheck_spark.plans.stages import StageRunner
 from replicheck_spark.sources.io import TableIO
 
 EDGE_COLS = ["a", "b", "a_url", "b_url", "jaccard", "hamming", "kind"]
@@ -136,16 +137,17 @@ def run_dedup(
     (docs, signatures, edges, labels, clusters, exact_groups) still persist —
     the bench/throughput mode.
     """
+    io = TableIO(spark, ckpt_root, run_id, iceberg_catalog=iceberg_catalog)
+    sink = (MetricsSink(io, f"{ckpt_root}/{run_id}/_metrics")
+            if collect_metrics else None)
     # Scope the input-sized advisory to THIS run: every durable output is on
     # disk by the time we return, so later queries in the session (bench
     # headline queries, a run over a different input) must see the session
     # default again, not this input's sizing.
     prev_advisory = _auto_advisory_partition_size(spark, pages)
     try:
-        return _run_dedup_stages(
-            spark, pages, cfg, ckpt_root, run_id, with_substr,
-            collect_metrics, checkpoint, iceberg_catalog,
-        )
+        return _run_dedup_stages(spark, pages, cfg, StageRunner(io, sink),
+                                 with_substr, checkpoint)
     finally:
         key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
         if prev_advisory is _ADVISORY_WAS_UNSET:
@@ -158,16 +160,11 @@ def _run_dedup_stages(
     spark: SparkSession,
     pages: DataFrame,
     cfg: DedupConfig,
-    ckpt_root: str,
-    run_id: str,
+    runner: StageRunner,
     with_substr: bool,
-    collect_metrics: bool,
     checkpoint: str,
-    iceberg_catalog: str | None,
 ) -> DedupResult:
-    io = TableIO(spark, ckpt_root, run_id, iceberg_catalog=iceberg_catalog)
-    sink = (MetricsSink(io, f"{ckpt_root}/{run_id}/_metrics")
-            if collect_metrics else None)
+    sink = runner.sink  # None: metrics off
     durable = {"docs", "signatures", "edges", "labels", "clusters", "exact_groups"}
 
     # A small single-file input scans as ONE split, serializing the extraction
@@ -177,49 +174,23 @@ def _run_dedup_stages(
     if pages.rdd.getNumPartitions() < parallelism:
         pages = pages.repartition(parallelism)
 
-    # stage-total output counts observed during each stage's own write job;
-    # threaded as the downstream stage's rows_in (no separate count jobs).
-    observed: dict[str, int] = {}
-    built: set[str] = set()  # stages written fresh this run (not resumed)
     # (stage_name, metric_frame, agg_exprs) resolved AFTER the consuming
     # actions ran: each frame derives from a lazily-checkpointed bucket table
     # that the pair-consuming stages materialize, so the drain agg is a cheap
     # job over cached partitions — not a recompute, and not an eager collect
-    # at build time (that was r2's serial-floor tax). df.observe is NOT an
-    # option for these: a lazy localCheckpoint anywhere downstream of the
-    # observe node fires a build-time listener event with empty accumulators
-    # that resolves the Observation to zero forever (measured on Spark 4.1.2
-    # — the r3 pipeline recorded cands_capped dropped=0 unconditionally).
+    # at build time (that was r2's serial-floor tax). Not a df.observe either:
+    # it would resolve to zero here (see lsh.candidate_pairs).
     deferred_metrics: list[tuple[str, DataFrame, list]] = []
 
     def stage(name: str, build, rows_in: str | None = None):
-        """Run (or resume) one stage: build() -> DataFrame, checkpointed.
-
-        rows_in names the UPSTREAM stage whose observed rows_out feeds this
-        stage (-1 when unknown, e.g. raw input or resumed upstream).
-        """
+        """Run (or resume) one stage; rows_in names its UPSTREAM stage."""
         if checkpoint == "min" and name not in durable:
             # lazy checkpoint: lineage still truncates and the result is
             # still computed exactly once (first consumer materializes it),
-            # but WITHOUT a dedicated job barrier per stage — each eager
-            # barrier cost ~1-2s of driver round-trip, a pure serial-floor
-            # tax at any core count
+            # but with no job barrier per stage: each eager one cost ~1-2 s
+            # of driver round-trip, a serial-floor tax at any core count
             return build().localCheckpoint(eager=False)
-        if io.exists(name):
-            return io.read(name)
-        with StageTimer() as t:
-            out = build()
-            obs = Observation()
-            io.write(
-                name, out.observe(obs, F.count(F.lit(1)).alias("rows_out"))
-            )
-            observed[name] = int(obs.get["rows_out"])
-            built.add(name)
-        out = io.read(name)
-        if collect_metrics:
-            sink.record_stage(name, observed.get(rows_in, -1), observed[name],
-                              t.wall_ms)
-        return out
+        return runner.run(name, build, rows_in)
 
     docs = stage("docs", lambda: extract_docs(pages))
     elig = eligible_docs(docs, cfg.min_size)
@@ -252,7 +223,7 @@ def _run_dedup_stages(
     def build_cands():
         bands = explode_bands(sigs, cfg)
         pairs, capped = candidate_pairs(bands, cfg)
-        if collect_metrics:
+        if sink:
             # resolved after the consuming action — see deferred_metrics
             deferred_metrics.append((
                 "cands_capped", capped,
@@ -269,7 +240,7 @@ def _run_dedup_stages(
     if with_substr:
         def build_substr():
             sub_cand, _capped, stats = anchor_pairs(sigs, cfg)
-            if collect_metrics:
+            if sink:
                 deferred_metrics.append((
                     "substr_anchors", stats,
                     [F.coalesce(F.sum("overflow"), F.lit(0)).alias("dropped"),
@@ -306,7 +277,7 @@ def _run_dedup_stages(
     # durable edges write — if "edges" was resumed from disk they never
     # executed and the agg would RECOMPUTE the bucketing from scratch, so
     # skip (the original run already recorded them).
-    if collect_metrics and (checkpoint != "min" or "edges" in built):
+    if sink and (checkpoint != "min" or "edges" not in runner.resumed):
         for mstage, frame, exprs in deferred_metrics:
             vals = frame.agg(*exprs).first().asDict()
             dropped = int(vals.get("dropped") or 0)
@@ -320,5 +291,5 @@ def _run_dedup_stages(
         edges=edges,
         labels=labels,
         clusters=clusters,
-        metrics=sink.read() if collect_metrics else None,
+        metrics=sink.read() if sink else None,
     )

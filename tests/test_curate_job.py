@@ -11,6 +11,7 @@ import os
 import subprocess
 import sys
 
+import pyarrow.parquet as pq
 import pytest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -70,6 +71,17 @@ def test_curate_job_lineage_and_resume(spark, planted_docs, tmp_path):
     kept = {r["doc_id"]: r["text"] for r in cur.collect()}
     assert set(kept) == {1, 4, 6}
     assert "[EMAIL]" in kept[4] and "example.com" not in kept[4]
+    # the metrics table (FIXTURES.md §3) carries the report's counts; rows_in
+    # is the upstream stage's count, -1 for the stage fed by the raw input
+    metrics = os.path.join(ckpt, "t1", "_metrics")
+    totals = {r["stage"]: r for r in pq.read_table(metrics).to_pylist()
+              if r["partition_id"] == -1}
+    assert set(totals) == set(st)
+    prev = -1
+    for name, row in st.items():
+        assert totals[name]["rows_out"] == row["rows_out"], name
+        assert totals[name]["rows_in"] == prev, name
+        prev = row["rows_out"]
 
     # resume: identical lineage, every stage read back from checkpoint
     out2 = _run_job(args)
@@ -79,6 +91,9 @@ def test_curate_job_lineage_and_resume(spark, planted_docs, tmp_path):
         for k, v in stages.items()
     }
     assert strip(out2["stages"]) == strip(out["stages"])
+    # a resumed stage records nothing: no further total rows
+    assert sum(r["partition_id"] == -1
+               for r in pq.read_table(metrics).to_pylist()) == len(st)
 
 
 def test_curate_job_optional_block_and_mix_stages(spark, planted_docs, tmp_path):

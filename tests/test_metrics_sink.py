@@ -7,6 +7,11 @@ on disk and the observed stage total, the named error on a footer/observe
 mismatch, and the two crash/resume shapes of ``_metrics/`` (a leftover
 dot-prefixed temp file; a part written by the older Spark append path next to
 driver-written parts).
+
+Also the stage runner both jobs share (``plans/stages.py``), which feeds the
+sink: a fresh stage's rows_out is its write's observed count; a resumed
+stage's comes from its parquet footers, with no count job; and a stage fed by
+a resumed upstream records the upstream's footer count as its rows_in.
 """
 
 from __future__ import annotations
@@ -15,6 +20,7 @@ import os
 
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
 from replicheck_spark.config import DedupConfig
 from replicheck_spark.plans.metrics import (
@@ -23,6 +29,7 @@ from replicheck_spark.plans.metrics import (
     MetricsSink,
 )
 from replicheck_spark.plans.pipeline import run_dedup
+from replicheck_spark.plans.stages import StageRunner
 from replicheck_spark.sources.io import TableIO
 
 RUN_ID = "ms"
@@ -129,3 +136,60 @@ def test_spark_written_part_reads_with_driver_parts(spark, planted_run,
     assert sorted(tuple(r) for r in sink.read().collect()) == want
     assert sorted(tuple(r.values())
                   for r in pq.read_table(sink.path).to_pylist()) == want
+
+
+def _runner(spark, root) -> StageRunner:
+    io = TableIO(spark, root, RUN_ID)
+    return StageRunner(io, MetricsSink(io, f"{root}/{RUN_ID}/_metrics"))
+
+
+def _totals(runner) -> list[tuple]:
+    return sorted((r["stage"], r["rows_in"], r["rows_out"])
+                  for r in runner.sink.read().collect()
+                  if r["partition_id"] == -1)
+
+
+def _never():
+    raise AssertionError("a committed stage was rebuilt")
+
+
+def test_fresh_then_resumed_stage_counts(spark, tmp_path):
+    root = str(tmp_path)
+    first = _runner(spark, root)
+    df = first.run("nums", lambda: spark.range(0, 1000, 1, 3))
+    assert first.rows == {"nums": 1000} and not first.resumed
+    assert df.count() == 1000
+    assert _totals(first) == [("nums", -1, 1000)]
+
+    again = _runner(spark, root)
+    resumed_jobs = _jobs_started(spark, lambda: again.run("nums", _never))
+    assert again.rows == {"nums": 1000} and again.resumed == {"nums"}
+    # the footer sum costs no Spark job: resuming launches no more jobs than
+    # reading the stage back
+    assert resumed_jobs <= _jobs_started(spark, lambda: again.io.read("nums"))
+    assert _totals(again) == [("nums", -1, 1000)]  # nothing re-recorded
+
+
+def test_stage_after_resumed_upstream_gets_its_footer_count(spark, tmp_path):
+    root = str(tmp_path)
+    _runner(spark, root).run("nums", lambda: spark.range(0, 1000, 1, 3))
+    runner = _runner(spark, root)
+    nums = runner.run("nums", _never)
+    # upstream defaults to the stage run last: a chain
+    runner.run("even", lambda: nums.filter(F.col("id") % 2 == 0))
+    assert runner.rows == {"nums": 1000, "even": 500}
+    assert runner.resumed == {"nums"}
+    assert _totals(runner) == [("even", 1000, 500), ("nums", -1, 1000)]
+
+
+def test_metrics_read_with_no_parts_is_empty(spark, tmp_path):
+    runner = _runner(spark, str(tmp_path))
+    assert runner.sink.read().count() == 0
+
+
+def test_explicit_upstream_overrides_the_chain(spark, tmp_path):
+    runner = _runner(spark, str(tmp_path))
+    nums = runner.run("nums", lambda: spark.range(0, 1000, 1, 3))
+    runner.run("even", lambda: nums.filter(F.col("id") % 2 == 0))
+    runner.run("odd", lambda: nums.filter(F.col("id") % 2 == 1), "nums")
+    assert ("odd", 1000, 500) in _totals(runner)
