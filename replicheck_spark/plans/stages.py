@@ -1,7 +1,8 @@
 """The resumable stage runner of both jobs (``run_dedup``, ``jobs/curate.py``).
 A committed stage (``TableIO.exists``) is read back and counted from its file
 metadata (parquet footers: no Spark job); any other is built, written with a
-``df.observe`` count on the write job, timed and recorded to the metrics sink.
+``df.observe`` count on the write job, timed, recorded to the metrics sink and
+read back with the schema it was written with (no schema-inference job).
 """
 
 from __future__ import annotations
@@ -28,10 +29,11 @@ class StageRunner:
             self.resumed.add(name)
             return io.read(name)
         t0, obs = time.monotonic(), Observation()
-        io.write(name, build().observe(obs, F.count(F.lit(1)).alias("rows_out")))
+        df = build().observe(obs, F.count(F.lit(1)).alias("rows_out"))
+        io.write(name, df)
         self.rows[name] = int(obs.get["rows_out"])
         if self.sink is not None:
             self.sink.record_stage(name, self.rows.get(upstream, -1),
                                    self.rows[name],
                                    int((time.monotonic() - t0) * 1000))
-        return io.read(name)
+        return io.read(name, schema=df.schema)

@@ -3,8 +3,8 @@
 AQE on (runtime coalescing + skew-join splitting), Arrow on (every Python
 crossing is vectorized), UTC, pinned shuffle partitions for determinism in
 tests. Local mode is the sandbox proxy for a cluster: ``local[N]`` = one JVM,
-N executor threads (scaling evidence runs the same job at local[8] vs
-local[32], see BENCH/BASELINE.md).
+N executor threads (the scaling guard runs the same job at local[2] vs
+local[8] through scripts/scaling_campaign.py, see BENCH/BASELINE.md).
 """
 
 from __future__ import annotations
@@ -30,8 +30,8 @@ def get_spark(
 ) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     master = master or f"local[{cpus}]"
-    # An EXPLICITLY pinned shuffle count (arg or env — bench.py --shuffle
-    # pins it at both scaling levels for identical-plan campaigns) must also
+    # An EXPLICITLY pinned shuffle count (arg or env — the scaling campaign's
+    # --shuffle pins it at both levels for identical-plan runs) must also
     # pin AQE's initialPartitionNum: initialPartitionNum OVERRIDES
     # spark.sql.shuffle.partitions for every AQE-coalesced shuffle, so
     # without this the per-core 32x default would silently give local[2] vs

@@ -19,6 +19,7 @@ import os
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 class TableIO:
@@ -81,7 +82,10 @@ class TableIO:
                 for f in sorted(os.listdir(path))
                 if not f.startswith(("_", "."))]
 
-    def read(self, stage: str) -> DataFrame:
+    def read(self, stage: str, schema: StructType | None = None) -> DataFrame:
+        """The stage's table. A known ``schema`` (the frame just written)
+        spares the parquet read its schema-inference job over the footers."""
         if self.iceberg_catalog:
             return self.spark.read.table(self._table(stage))
-        return self.spark.read.parquet(self._path(stage))
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(self._path(stage))

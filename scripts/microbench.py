@@ -16,7 +16,8 @@ judged against this envelope in BENCH/BASELINE.md: a pipeline that scales as
 well as the best primitive has no composition loss left to remove.
 
 Each measurement runs in a fresh subprocess (fresh JVM), levels interleaved,
-best-of-``--repeats`` per level — same methodology as ``bench.py --scaling``.
+best-of-``--repeats`` per level — same methodology as
+``scripts/scaling_campaign.py``.
 
 Usage::
 

@@ -7,17 +7,31 @@ Used for two kinds of committed evidence (BENCH/*.md):
 
 * scaling: same input + same pinned plan (SPARK_GRAFT_SHUFFLE pins both
   spark.sql.shuffle.partitions and AQE initialPartitionNum, see session.py)
-  at two parallelism levels — local[8] vs local[32], or the multi-JVM proxy
-  local-cluster[1,8,M] vs local-cluster[4,8,M] (N -> 4N executor JVMs, each
-  with its own heap/GC).
+  at two parallelism levels — the standing local[2] vs local[8] guard, or
+  the multi-JVM proxy local-cluster[1,8,M] vs local-cluster[4,8,M] (N -> 4N
+  executor JVMs, each with its own heap/GC).
 * A/B: same master, interleaved env overlays (``--envsets``, e.g.
   '' 'SPARK_GRAFT_IO_CODEC=zstd').
 
 Interleaving (level0, level1, level0, level1, ...) makes co-tenant noise hit
 both cells alike; fresh subprocesses make every run cold-JVM comparable.
 
-Example:
-  python scripts/scaling_campaign.py --pages /tmp/c1600k/pages.parquet \
+The input is a deterministic planted corpus (seed 42, FIXTURES.md plan),
+written once and reused by every run:
+
+  mkdir -p /dev/shm/pages_cache && python -c "from replicheck_spark.corpus \
+import write_pages_parquet as w; \
+w('/dev/shm/pages_cache/pages_1600000_s42.parquet', n_docs=1_600_000, seed=42)"
+
+The 2v8 scaling guard (BENCH/SCALING_2v8_1600k_r8.md):
+
+  python scripts/scaling_campaign.py \
+      --pages /dev/shm/pages_cache/pages_1600000_s42.parquet \
+      --masters 'local[2]' 'local[8]' --shuffle 64 --advisory 4m --repeats 2
+
+The multi-JVM proxy:
+
+  python scripts/scaling_campaign.py --pages <pages.parquet> \
       --masters 'local-cluster[1,8,16384]' 'local-cluster[4,8,16384]' \
       --shuffle 128 --repeats 2
 """

@@ -170,6 +170,26 @@ def test_fresh_then_resumed_stage_counts(spark, tmp_path):
     assert _totals(again) == [("nums", -1, 1000)]  # nothing re-recorded
 
 
+def test_fresh_stage_costs_no_more_jobs_than_its_write(spark, tmp_path):
+    def build():
+        return spark.range(0, 1000, 1, 3).withColumn("half", F.col("id") / 2)
+
+    runner = _runner(spark, str(tmp_path))
+    df = None
+
+    def run():
+        nonlocal df
+        df = runner.run("nums", build)
+
+    fresh_jobs = _jobs_started(spark, run)
+    plain = TableIO(spark, str(tmp_path), "plain")
+    # the read-back takes the written frame's schema: no schema-inference job
+    assert fresh_jobs <= _jobs_started(spark, lambda: plain.write("nums", build()))
+    inferred = runner.io.read("nums")
+    assert df.schema == inferred.schema
+    assert sorted(df.collect()) == sorted(inferred.collect())
+
+
 def test_stage_after_resumed_upstream_gets_its_footer_count(spark, tmp_path):
     root = str(tmp_path)
     _runner(spark, root).run("nums", lambda: spark.range(0, 1000, 1, 3))
