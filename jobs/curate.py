@@ -122,7 +122,7 @@ def main(argv=None) -> int:
     from replicheck_spark.plans.metrics import MetricsSink
     from replicheck_spark.plans.stages import StageRunner
     from replicheck_spark.session import get_spark
-    from replicheck_spark.sources.io import TableIO
+    from replicheck_spark.sources.io import TableIO, parquet_row_counts
 
     cfg = DedupConfig(
         min_similarity=args.threshold, shingle_k=args.shingle_k,
@@ -159,7 +159,8 @@ def main(argv=None) -> int:
             "doc_id", "text",
             *(c for c in ("lang", "source") if c in raw.columns),
         )
-    n_raw = raw.count()
+    # the input's row count from its parquet footers: no Spark job
+    n_raw = sum(parquet_row_counts(raw.inputFiles()))
     # the stages form one chain: each one's rows_in is its runner predecessor's
     docs0 = runner.run("docs", build_docs)
 

@@ -236,45 +236,28 @@ def anchor_pairs(
     pipeline's drain pattern — df.observe cannot be used here, see
     operators/lsh.py candidate_pairs).
 
-    Skew: the SAME two-level salted capped aggregation as the LSH band stage
-    (lsh.py candidate_pairs). A boilerplate shingle ≡ 0 (mod q) can appear
+    Skew: the LSH band stage's two-level salted capped aggregation
+    (lsh.capped_id_buckets). A boilerplate shingle ≡ 0 (mod q) can appear
     in 10^7+ docs; a single-level collect_list would materialize that whole
     bucket in one aggregation buffer before the cap applies. Salting on
     doc_id bounds any task's buffer at ``bucket_cap`` and the merge level at
     ``salt_buckets * bucket_cap``; every truncation is counted, never
     silent.
     """
-    from replicheck_spark.operators.lsh import intra_array_pairs
+    from replicheck_spark.operators.lsh import capped_id_buckets, intra_array_pairs
 
     anchors = anchor_index(signatures, cfg)
     # identical docs already linked by the exact stage: one rep per sha256
     anchors = anchors.groupBy("anchor", "sha256").agg(F.min("doc_id").alias("doc_id"))
-    chunks = (
-        anchors.withColumn(
-            "salt", F.pmod(F.xxhash64("doc_id"), F.lit(cfg.salt_buckets))
-        )
-        .groupBy("anchor", "salt")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("chunk_ids"))
-        .withColumn(
-            "chunk_over", F.greatest(F.size("chunk_ids") - bucket_cap, F.lit(0))
-        )
-        .withColumn("chunk_ids", F.slice("chunk_ids", 1, bucket_cap))
-    )
     buckets = (
-        chunks.groupBy("anchor")
-        .agg(
-            F.sort_array(F.flatten(F.collect_list("chunk_ids"))).alias("all_ids"),
-            F.sum("chunk_over").alias("chunk_over"),
+        capped_id_buckets(
+            anchors.withColumn(
+                "salt", F.pmod(F.xxhash64("doc_id"), F.lit(cfg.salt_buckets))
+            ),
+            ["anchor"], bucket_cap,
         )
-        .select(
-            "anchor",
-            (F.size("all_ids") + F.col("chunk_over")).alias("rows"),
-            (
-                F.col("chunk_over")
-                + F.greatest(F.size("all_ids") - bucket_cap, F.lit(0))
-            ).alias("overflow"),
-            F.slice("all_ids", 1, bucket_cap).alias("ids"),
-        )
+        # every member kept or truncated at either level
+        .withColumn("rows", F.size("ids") + F.col("overflow"))
         # lazy: materialized by the first cand consumer, then shared by the
         # capped/stats metric aggs instead of recomputing the explode+agg.
         # Cap BEFORE the checkpoint: caching uncapped membership would store

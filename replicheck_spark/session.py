@@ -82,6 +82,13 @@ def get_spark(
                 str(shuffle_partitions if pinned else 32 * _master_cores(master)),
             ),
         )
+        # One shuffle file per map task: at <= 200 partitions (a 4-core
+        # session's 128, a pinned 64) Spark's bypass-merge writer writes one
+        # file per reduce partition in every map task, then concatenates
+        # them; 0 keeps every exchange on the sort writer that >= 7-core
+        # sessions already use. Same outputs, faster on 4 cores
+        # (BENCH/BASELINE.md, round 10; tests/test_session.py).
+        .config("spark.shuffle.sort.bypassMergeThreshold", "0")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")

@@ -22,6 +22,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 
+def parquet_row_counts(files: list[str]) -> list[int]:
+    """Rows of each parquet file (a local path or a URI such as
+    ``DataFrame.inputFiles()`` returns), read from its footer: no Spark job."""
+    return [pq.ParquetFile(f).metadata.num_rows for f in files]
+
+
 class TableIO:
     def __init__(self, spark: SparkSession, root: str, run_id: str,
                  iceberg_catalog: str | None = None):
@@ -78,9 +84,9 @@ class TableIO:
             ).collect()
             return [r["record_count"] for r in sorted(files)]
         path = self._path(stage)
-        return [pq.ParquetFile(os.path.join(path, f)).metadata.num_rows
-                for f in sorted(os.listdir(path))
-                if not f.startswith(("_", "."))]
+        return parquet_row_counts([os.path.join(path, f)
+                                   for f in sorted(os.listdir(path))
+                                   if not f.startswith(("_", "."))])
 
     def read(self, stage: str, schema: StructType | None = None) -> DataFrame:
         """The stage's table. A known ``schema`` (the frame just written)

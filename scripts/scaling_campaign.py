@@ -103,7 +103,7 @@ def main() -> int:
     ap.add_argument("--masters", nargs="+", required=True)
     ap.add_argument("--repeats", type=int, default=2)
     ap.add_argument("--shuffle", type=int, default=128)
-    ap.add_argument("--advisory", default="16m")
+    ap.add_argument("--advisory", default="4m")
     ap.add_argument("--driver-mem", default="24g")
     ap.add_argument("--no-substr", action="store_true")
     ap.add_argument("--envsets", nargs="*", default=[""],

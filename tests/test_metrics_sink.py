@@ -30,7 +30,7 @@ from replicheck_spark.plans.metrics import (
 )
 from replicheck_spark.plans.pipeline import run_dedup
 from replicheck_spark.plans.stages import StageRunner
-from replicheck_spark.sources.io import TableIO
+from replicheck_spark.sources.io import TableIO, parquet_row_counts
 
 RUN_ID = "ms"
 
@@ -213,3 +213,17 @@ def test_explicit_upstream_overrides_the_chain(spark, tmp_path):
     runner.run("even", lambda: nums.filter(F.col("id") % 2 == 0))
     runner.run("odd", lambda: nums.filter(F.col("id") % 2 == 1), "nums")
     assert ("odd", 1000, 500) in _totals(runner)
+
+
+def test_input_footer_count_matches_count_without_a_job(spark, tmp_path):
+    """The curate job's input count (``jobs/curate.py`` ``rows_in`` of its
+    ``docs`` stage) comes from the input's parquet footers."""
+    src = str(tmp_path / "in.parquet")
+    spark.range(0, 1234, 1, 5).write.parquet(src)
+    raw = spark.read.parquet(src)
+    assert len(raw.inputFiles()) > 1
+    rows = []
+    assert _jobs_started(
+        spark, lambda: rows.append(sum(parquet_row_counts(raw.inputFiles())))
+    ) == 0
+    assert rows == [raw.count()] == [1234]
